@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tits_spark.datagen import generate_quotes
-from tits_spark.operators.guess_lag import guess_lag
+from tits_spark.operators.guess_lag import best_lag, guess_lag, melt_books
 from tits_spark.operators.windows import best_by, first_diff, sliding_last_n, top_k
 
 
@@ -36,11 +36,95 @@ def test_best_lag_recovers_planted_offsets(quotes):
                 assert abs(got[k] - ms / 1000.0) <= 0.011, (k, got[k])
 
 
+def _ref_argmax(xcf):
+    """The reference loop (ref:guess_lag.c:286-304): first maximum wins,
+    a NaN at index 0 is never beaten."""
+    k, x = 0, xcf[0]
+    for i in range(1, len(xcf)):
+        if xcf[i] > x:
+            k, x = i, xcf[i]
+    return k, x
+
+
 def test_full_correlogram_shape(quotes):
     out = guess_lag(quotes, best=False, nlags=16, tau=0.01)
     pdf = out.toPandas()
     per_pair = pdf.groupby(["side", "key1", "key2"]).size()
     assert (per_pair == 33).all()  # 2*nlags + 1
+
+    # each best row is the first argmax of its own correlogram
+    bests = {
+        (r["side"], r["key1"], r["key2"]): (r["best_lag"], r["best_xcf"])
+        for r in guess_lag(quotes, best=True, nlags=16, tau=0.01).collect()
+    }
+    assert set(bests) == set(per_pair.index)
+    for key, d in pdf.groupby(["side", "key1", "key2"]):
+        d = d.sort_values("lag_time")
+        xcf, lags = d["xcf"].to_numpy(), d["lag_time"].to_numpy()
+        k, x = _ref_argmax(xcf)
+        lag, bx = bests[key]
+        if np.isnan(xcf[0]):
+            assert np.isnan(lag) and np.isnan(bx), key
+        else:
+            assert (lag, bx) == (lags[k], x), key
+
+
+def test_best_lag_reference_argmax():
+    nan = float("nan")
+    # NaN mid-array is skipped; tied maxima -> the first one wins
+    xcf = np.array([0.1, nan, 0.7, 0.3, 0.7, nan])
+    assert best_lag(xcf, 2, 0.5) == (0.0, 0.7)
+    assert _ref_argmax(xcf) == (2, 0.7)
+    # NaN at index 0 propagates even though later lags are finite
+    lag, x = best_lag(np.array([nan, 0.9, 0.9, nan, 0.2]), 2, 0.5)
+    assert np.isnan(lag) and np.isnan(x)
+
+
+def test_partition_invariance(spark):
+    """Same rows whatever the shuffle width, with AQE on or off, and
+    whatever order tied rows arrive in, on an input with tied
+    timestamps inside every book and at the max_ticks cut."""
+    q = (
+        generate_quotes(spark, n_ticks=1000, seed=2)
+        .withColumn("ts", F.date_trunc("millisecond", "ts"))
+        .cache()
+    )
+    max_ticks = 502
+    newest = [
+        np.sort(d["ts"].to_numpy())[::-1]
+        for _, d in melt_books(q).toPandas().groupby(["side", "venue"])
+    ]
+    assert all((t[1:] == t[:-1]).any() for t in newest)
+    assert any(t[max_ticks - 1] == t[max_ticks] for t in newest)
+
+    def run(quotes):
+        out = []
+        for best in (True, False):
+            keys = ["side", "key1", "key2"] + ([] if best else ["lag_time"])
+            pdf = guess_lag(quotes, best=best, max_ticks=max_ticks, nlags=8, tau=0.01).toPandas()
+            out.append(pdf.sort_values(keys).reset_index(drop=True))
+        return out
+
+    conf = spark.conf
+    saved = {k: conf.get(k) for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")}
+    results = {}
+    try:
+        for parts in ("1", "8"):
+            for aqe in ("false", "true"):
+                conf.set("spark.sql.shuffle.partitions", parts)
+                conf.set("spark.sql.adaptive.enabled", aqe)
+                results[(parts, aqe)] = run(q)
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
+    # the same quotes in other input layouts: tied rows arrive in another order
+    for col in ("bid", "ask"):
+        results[("input", col)] = run(q.repartition(3, col))
+
+    best0, full0 = results.pop(("1", "false"))
+    assert len(best0) == 12 and len(full0) == 12 * 17
+    for how, (b, f) in results.items():
+        assert b.equals(best0) and f.equals(full0), how
 
 
 def test_sliding_last_n(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -456,10 +457,18 @@ def test_cogroup_and_grouped_udf_numbered_repartition(spark, ev):
     quotes = generate_quotes(spark, n_ticks=500, seed=11)
     gl = guess_lag(quotes, best=True, max_ticks=256, nlags=8, tau=0.01)
     assert gl.rdd.getNumPartitions() == par
-    # two children each repartitioned once; the cogroup itself must not
-    # add a third exchange on top
-    p = plan_of(gl)
-    assert p.count("Exchange hashpartitioning") <= 2 or p.count("Exchange (") <= 4
+    # pair rows go through one mapInPandas, no cogroup; after execution
+    # the books window's shuffle is computed once, every other copy is
+    # reused
+    gl.collect()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        gl.explain()
+    final = buf.getvalue().split("== Initial Plan ==")[0]
+    assert "FlatMapCoGroupsInPandas" not in final and "MapInPandas" in final
+    books = re.compile(r"Exchange hashpartitioning\(side#\d+, venue#\d+")
+    lines = [ln for ln in final.splitlines() if books.search(ln)]
+    assert sum("ReusedExchange" not in ln for ln in lines) == 1, lines
 
     df = ev.select(F.col("user_id").alias("k"), "ts", "value")
     assert lttb(df, 10, key_col="k").rdd.getNumPartitions() == par

@@ -19,9 +19,14 @@ book hits EDG_TICKS rows; a batch job sees one snapshot, so each
 eligible book fires once on its newest EDG_TICKS rows. The planted-lag
 fixture asserts the recovered offsets, not stream replay order.
 
-Scale shape: pair registry is tiny (venues^2) -> broadcast; the heavy
-shuffle is the single cogroup on (side, key1, key2); per-book state is
-bounded by MAX_TICKS, so task memory is O(1) regardless of input size.
+Scale shape: the books are built once — one window shuffle on (side,
+venue), then one aggregate row per book holding its rows sorted by
+(t, px), keyed like the window so it adds no shuffle. A self-join on
+side turns the books into pair rows (venues^2 of them, each carrying
+both books), and the pairs are independent, so a round-robin
+repartition spreads them evenly over the tasks of one mapInPandas.
+Per-book state is bounded by MAX_TICKS, so task memory is O(1)
+regardless of input size.
 """
 
 from __future__ import annotations
@@ -56,6 +61,16 @@ def melt_books(quotes: DataFrame) -> DataFrame:
     return bid.unionByName(ask)
 
 
+def best_lag(xcf: np.ndarray, nlags: int, tau: float) -> tuple[float, float]:
+    """(best_lag, best_xcf) of one correlogram by the reference argmax:
+    the first maximal element wins, NaNs elsewhere are skipped, and a NaN
+    at the first lag makes the result NaN (ref:guess_lag.c:286-304)."""
+    if np.isnan(xcf[0]):
+        return float("nan"), float("nan")
+    k = int(np.nanargmax(xcf))
+    return (k - nlags) * tau, float(xcf[k])
+
+
 def guess_lag(
     quotes: DataFrame,
     best: bool = True,
@@ -75,88 +90,62 @@ def guess_lag(
     if low_ticks is None:
         low_ticks = 2 * max_ticks // 4 + 1
 
-    books = sliding_last_n(melt_books(quotes), ["side", "venue"], "ts", max_ticks)
-    books = books.select("side", "venue", ts_seconds("ts").alias("t"), "px")
+    books = (
+        sliding_last_n(melt_books(quotes), ["side", "venue"], "ts", max_ticks)
+        .groupBy("side", "venue")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.array_sort(F.collect_list(F.struct(ts_seconds("ts").alias("t"), "px"))).alias("rows"),
+        )
+    )
+    # trigger fires on its newest edg_ticks rows (ref fires at n == EDG)
+    trig = books.filter(F.col("n") >= edg_ticks).select(
+        "side", F.col("venue").alias("key1"),
+        F.slice("rows", -edg_ticks, edg_ticks).alias("rows1"),
+    )
+    part = books.filter(F.col("n") >= low_ticks).select(
+        "side", F.col("venue").alias("key2"), F.col("rows").alias("rows2")
+    )
+    pairs = trig.join(part, "side").filter(F.col("key1") != F.col("key2")).select(
+        "side", "key1", "key2",
+        F.col("rows1.t").alias("t1"), F.col("rows1.px").alias("p1"),
+        F.col("rows2.t").alias("t2"), F.col("rows2.px").alias("p2"),
+    )
+    lag_time = np.arange(-nlags, nlags + 1) * tau
 
-    counts = books.groupBy("side", "venue").agg(F.count(F.lit(1)).alias("n"))
-    trig = counts.filter(F.col("n") >= edg_ticks).select(
-        "side", F.col("venue").alias("key1")
-    )
-    part = counts.filter(F.col("n") >= low_ticks).select(
-        "side", F.col("venue").alias("key2"), F.col("n").alias("n2")
-    )
-    pairs = (
-        trig.join(part, "side")
-        .filter(F.col("key1") != F.col("key2"))
-        .select("side", "key1", "key2")
-    )
+    def run_pairs(batches):
+        for b in batches:
+            out = []
+            for side, key1, key2, t1, p1, t2, p2 in zip(
+                b["side"], b["key1"], b["key2"], b["t1"], b["p1"], b["t2"], b["p2"]
+            ):
+                # rebase t to the trigger's first ts; first-difference the
+                # prices and drop the first element of each book (clean
+                # form of ref:guess_lag.c:228-236's synthetic zero slot)
+                tref = t1[0]
+                xcf = K.xcor(t1[1:] - tref, np.diff(p1), t2[1:] - tref, np.diff(p2), nlags, tau)
+                if best:
+                    lag, x = best_lag(xcf, nlags, tau)
+                    out.append(pd.DataFrame({
+                        "side": [side], "key1": [key1], "key2": [key2],
+                        "best_lag": [lag], "best_xcf": [x],
+                    }))
+                else:
+                    out.append(pd.DataFrame({
+                        "side": side, "key1": key1, "key2": key2,
+                        "lag_time": lag_time, "xcf": xcf,
+                    }))
+            if out:
+                yield pd.concat(out, ignore_index=True)
 
-    b1 = books.alias("b1")
-    b2 = books.alias("b2")
-    side1 = b1.join(
-        F.broadcast(pairs.alias("pp1")),
-        (F.col("b1.side") == F.col("pp1.side")) & (F.col("b1.venue") == F.col("pp1.key1")),
-    ).select(
-        F.col("pp1.side").alias("side"), F.col("pp1.key1").alias("key1"),
-        F.col("pp1.key2").alias("key2"), F.col("b1.t").alias("t"), F.col("b1.px").alias("px"),
-    )
-    side2 = b2.join(
-        F.broadcast(pairs.alias("pp2")),
-        (F.col("b2.side") == F.col("pp2.side")) & (F.col("b2.venue") == F.col("pp2.key2")),
-    ).select(
-        F.col("pp2.side").alias("side"), F.col("pp2.key1").alias("key1"),
-        F.col("pp2.key2").alias("key2"), F.col("b2.t").alias("t"), F.col("b2.px").alias("px"),
-    )
-
-    def run_pair(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        cols = ["side", "key1", "key2", "lag_time", "xcf"] if not best else \
-               ["side", "key1", "key2", "best_lag", "best_xcf"]
-        if left.empty or right.empty:
-            return pd.DataFrame(columns=cols)
-        l = left.sort_values("t", kind="stable")
-        r = right.sort_values("t", kind="stable")
-        # trigger fires on its newest edg_ticks rows (ref fires at n == EDG)
-        l = l.iloc[-edg_ticks:]
-        t1 = l["t"].to_numpy(np.float64)
-        t2 = r["t"].to_numpy(np.float64)
-        tref = t1[0]
-        # first-difference prices; drop the first element of each book
-        # (clean form of ref:guess_lag.c:228-236's synthetic zero slot)
-        p1 = np.diff(l["px"].to_numpy(np.float64))
-        p2 = np.diff(r["px"].to_numpy(np.float64))
-        xcf = K.xcor(t1[1:] - tref, p1, t2[1:] - tref, p2, nlags, tau)
-        meta = (l["side"].iloc[0], l["key1"].iloc[0], l["key2"].iloc[0])
-        if not best:
-            lag_time = (np.arange(-nlags, nlags + 1)) * tau
-            return pd.DataFrame({
-                "side": meta[0], "key1": meta[1], "key2": meta[2],
-                "lag_time": lag_time, "xcf": xcf,
-            })
-        # reference argmax: first maximal element wins; NaN -> NaN lag
-        # (ref:guess_lag.c:286-304)
-        bestl = 0
-        bestx = xcf[0]
-        for k in range(1, xcf.size):
-            if xcf[k] > bestx:
-                bestx = xcf[k]
-                bestl = k
-        best_lag = float("nan") if np.isnan(bestx) else (bestl - nlags) * tau
-        return pd.DataFrame({
-            "side": [meta[0]], "key1": [meta[1]], "key2": [meta[2]],
-            "best_lag": [best_lag], "best_xcf": [bestx],
-        })
-
-    # numbered repartition on both cogroup children: the XCF stage is
-    # the most CPU-per-byte stage in the engine (nlags x n kernel per
-    # pair over compact rows), exactly the shape AQE's advisory-size
-    # coalescing serializes onto one task. A numbered repartition is
-    # exempt from coalescing and its HashPartitioning satisfies the
-    # cogroup's clustered distribution on both sides (same keys, same
-    # count), so no second shuffle appears (tests/test_plans.py).
+    # numbered round-robin repartition: the XCF stage is the most
+    # CPU-per-byte stage in the engine (nlags x n kernel per pair), and
+    # each pair row carries both of its books, so pairs are independent
+    # rows. A numbered repartition is exempt from AQE's advisory-size
+    # coalescing (which would serialize the pairs onto one task), and
+    # round-robin spreads them evenly where hashing (side, key1, key2)
+    # leaves some tasks with more pairs than others (tests/test_plans.py).
     nparts = quotes.sparkSession.sparkContext.defaultParallelism
-    keys = ["side", "key1", "key2"]
-    return (
-        side1.repartition(nparts, *keys).groupBy(*keys)
-        .cogroup(side2.repartition(nparts, *keys).groupBy(*keys))
-        .applyInPandas(run_pair, schema=_BEST_SCHEMA if best else _FULL_SCHEMA)
+    return pairs.repartition(nparts).mapInPandas(
+        run_pairs, schema=_BEST_SCHEMA if best else _FULL_SCHEMA
     )

@@ -21,8 +21,11 @@ def sliding_last_n(
     df: DataFrame, keys: Sequence[str], ts: str, n: int
 ) -> DataFrame:
     """Keep the newest ``n`` rows per key — the batch analog of the
-    reference's MAX_TICKS ring buffer (W1)."""
-    w = Window.partitionBy(*keys).orderBy(F.col(ts).desc())
+    reference's MAX_TICKS ring buffer (W1). Rows tied on ``ts`` at the
+    cut are ranked by the remaining columns, descending, so the rows
+    kept do not depend on shuffle arrival order."""
+    rest = [F.col(c).desc() for c in df.columns if c != ts and c not in keys]
+    w = Window.partitionBy(*keys).orderBy(F.col(ts).desc(), *rest)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= n)

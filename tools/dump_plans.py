@@ -4,8 +4,8 @@ Usage:
   python tools/dump_plans.py --repo /root/repo --out plans/r06 --suffix after q_chow q_theta ...
 
 Query names: any key of __spark_entry__.queries(), plus the bench-only
-pseudo-queries q4_sacf / q6_minhash / q7_ngram / q11_clusters /
-q1_rollup_1m (built exactly as bench.py builds them).
+pseudo-queries q4_sacf / q5_guess_lag / q6_minhash / q7_ngram /
+q11_clusters / q1_rollup_1m (built exactly as bench.py builds them).
 
 Driver-side only (no jobs run); safe to run alongside other work.
 """
@@ -65,6 +65,13 @@ def main() -> None:
         )
         return sacf_by_key_batched(gaps, nlags=5, tau=60.0, min_points=16)
 
+    def _q5():
+        from tits_spark.datagen import generate_quotes
+        from tits_spark.operators.guess_lag import guess_lag
+
+        quotes = generate_quotes(spark, n_ticks=30_000, seed=42).cache()
+        return guess_lag(quotes, best=True, nlags=64, tau=0.01)
+
     def _q6():
         _, docs = bench_frames()
         from tits_spark.operators.dedup import minhash_lsh_pairs
@@ -96,6 +103,7 @@ def main() -> None:
 
     pseudo = {
         "q4_sacf": _q4,
+        "q5_guess_lag": _q5,
         "q6_minhash": _q6,
         "q7_ngram": _q7,
         "q11_clusters": _q11,
