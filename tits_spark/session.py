@@ -9,9 +9,11 @@ Round-6 optimization notes (guide §5, §6, §9; OPTIMIZATION_r06.md):
  - ``spark.driver.memory``: in local mode the driver JVM *is* every
    executor; the old 8g heap gave 32 concurrent tasks ~250 MB each and
    measurable GC pressure on the hash-agg heavy families. Default is
-   now 32g (the sandbox has 128 GiB; on a real cluster this setting is
-   ignored — executor memory comes from spark-submit). Override with
-   $SPARK_GRAFT_DRIVER_MEM.
+   a quarter of the host's RAM, capped at 32g: a fixed 32g heap on a
+   host with less RAM than that lets the JVM grow until the kernel
+   OOM-kills it, since G1 expands the heap before it collects (on a
+   real cluster this setting is ignored — executor memory comes from
+   spark-submit). Override with $SPARK_GRAFT_DRIVER_MEM.
  - ``spark.local.dir``: shuffle/spill files default to /tmp, which in
    this sandbox is the shared *disk* volume; production deploys put
    them on node-local NVMe. /dev/shm (tmpfs) is the one-box analog of
@@ -37,6 +39,16 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_mem() -> str:
+    """A quarter of the host's RAM in whole GiB, within [1g, 32g]."""
+    try:
+        gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    except (ValueError, OSError, AttributeError):
+        return "32g"
+    return f"{max(1, min(32, int(gib // 4)))}g"
+
+
 # Defaults sized for the sandbox (local[N], 128 GiB). On a real cluster
 # these come from spark-submit conf; shuffle partitions should be
 # ~2-3x total executor cores, and AQE coalesces the excess at runtime.
@@ -50,7 +62,7 @@ _DEFAULTS = {
     # JVM<->Python transfer; per-series kernels want whole groups anyway.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
     "spark.sql.shuffle.partitions": "32",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
     "spark.local.dir": os.environ.get(
         "SPARK_GRAFT_LOCAL_DIR", "/dev/shm/tits_spark_local"
     ),
